@@ -11,6 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from project_orbit_spark.session import cache_token, register_df_cache
 
 TABLES = (
     "region",
@@ -120,6 +123,77 @@ def barrier_width(df: DataFrame) -> int:
     return max(sess.sparkContext.defaultParallelism, sp)
 
 
+def constant_table(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small literal table (lexicons, section lists, injected test
+    rows) as a JVM ``LocalRelation``. ``schema`` is a DDL string.
+
+    The rows travel as one Arrow table, so the plan holds the data
+    itself: no Python worker serves its scans and no RDD is re-read
+    per scan, as a table created from a Python list would need. The
+    Arrow path needs no session conf, so it behaves the same in any
+    caller's session. Every literal table in the package comes from
+    here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
+
+
+# (session token, resolved path, file fingerprint, nanosAsLong) ->
+# inferred schema. Plain StructTypes, registered so clear_df_caches()
+# drops dead sessions' entries.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = register_df_cache({})
+
+
+def _file_fingerprint(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of the file, or of every file
+    under a directory: a rewrite in place or a changed part listing
+    changes the fingerprint. Raises OSError for a missing path."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once.
+
+    Parquet schema inference reads the footers in a Spark job. The
+    first read of a file in a session infers and remembers the schema;
+    later reads pass it with ``.schema(...)`` and launch no job. Every
+    call still builds a fresh relation, so self-joins keep distinct
+    attributes. The key holds the file fingerprint, so a file
+    rewritten in place is inferred again, and the nanosAsLong conf,
+    which changes how TIMESTAMP(NANOS) columns are inferred."""
+    real = os.path.realpath(path)
+    try:
+        key = (
+            cache_token(spark),
+            real,
+            _file_fingerprint(real),
+            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        )
+    except OSError:  # missing path: let Spark raise its own error
+        return spark.read.parquet(path)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def load(
     spark: SparkSession,
     sf_dir: str,
@@ -128,6 +202,9 @@ def load(
     fan_out_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Load one testdata table as a DataFrame (lazy parquet scan).
+
+    The schema is inferred once per session and file version
+    (``_read_parquet``), so a repeat load launches no Spark job.
 
     ``events.ts`` has shipped in two physical vintages: TIMESTAMP(NANOS)
     (which Spark's parquet reader only reads as raw long nanos under the
@@ -165,7 +242,7 @@ def load(
         # session timezone; pin it to UTC so window/date strings match
         # the (timezone-naive) parquet values in any driver session
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             # nanos-as-long vintage: truncate to micros with INTEGER
@@ -184,7 +261,7 @@ def load(
         if fan_out:
             df = _fan_out_scan(spark, df, path, fan_out_cols)
         return df
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if fan_out:
         df = _fan_out_scan(spark, df, path, fan_out_cols)
     return df
@@ -212,7 +289,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, "events.parquet")
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
+    ts_type = _read_parquet(spark, path).schema["ts"].dataType
     nanos = isinstance(ts_type, T.LongType)
     raw_schema = (
         f"event_id long, ts {'long' if nanos else ts_type.simpleString()}, "
@@ -246,8 +323,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 # Holds plain bools, no Spark resources, but registered with the
 # session cache registry so clear_df_caches() evicts dead sessions'
 # entries instead of growing without bound in a long-lived driver.
-from project_orbit_spark.session import register_df_cache  # noqa: E402
-
 _PROBE_CACHE: dict[tuple[str, int, int], bool] = register_df_cache({})
 
 
@@ -308,8 +383,6 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     join strategy, no plan-build job, 2x faster per call).
     """
     from pyspark.sql import functions as F
-
-    from project_orbit_spark.session import cache_token
 
     src = probe if probe is not None else df
     try:

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import constant_table, load
 from project_orbit_spark.registry import register
 
 ROUND_NAMES = ("Seed", "Series A", "Series B", "Series C")
@@ -156,9 +156,7 @@ def funding_sentence_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def investor_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = press_corpus(spark, sf_dir)
-    lex = p.sparkSession.createDataFrame(
-        [(k,) for k in KNOWN_INVESTORS], ["known"]
-    )
+    lex = constant_table(spark, [(k,) for k in KNOWN_INVESTORS], "known string")
     matched = p.join(
         F.broadcast(lex),
         F.lower("press_text").contains(F.lower(F.col("known"))),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import constant_table, load
 from project_orbit_spark.registry import register
 
 # F3 placeholder names (ref src/structured_extraction_v2.py:112-144)
@@ -100,13 +100,14 @@ def entity_name_gauntlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").filter(F.col("c_custkey") % 10 == 0).select(
         F.col("c_name").alias("name")
     )
-    injected = spark.createDataFrame(
+    injected = constant_table(
+        spark,
         [
             ("John Doe",), ("Jane Smith",), ("Test User",), ("About Us",),
             ("Privacy Policy",), ("CEO John Smith",), ("Madonna",),
             ("Sample Person",), ("Ada Lovelace",),
         ],
-        ["name"],
+        "name string",
     )
     cand = c.unionByName(injected)
     name = F.col("name")

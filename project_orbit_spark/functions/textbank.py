@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import constant_table, load
 from project_orbit_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -416,7 +416,8 @@ def _bpe_oracle_sql(k: int) -> str:
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = _bpe_fit(spark, sf_dir, final_seg=False)
     if not merges:  # no adjacent pairs anywhere (ADVICE r14 #1)
-        return spark.createDataFrame(
+        return constant_table(
+            spark,
             [],
             "merge_rank long, left_sym string, right_sym string, "
             "merged string, pair_count long",

@@ -99,12 +99,12 @@ def connected_components(
     # grouped aggregate — the separate distinct-nodes init frame (its
     # own checkpoint job + shuffle every CC call) never needs to
     # exist. Every node of sym appears as src (symmetrized), so the
-    # node set is identical. Fixpoint detection is unaffected: with
-    # ≥1 edge, round 1 always strictly decreases sum(label) vs init
-    # (each edge's larger endpoint takes the smaller label), so the
-    # skipped init-vs-round-1 comparison could never have been the
-    # converging one; the empty graph IS its own fixpoint (sum None)
-    # and returns before the loop.
+    # node set is identical. The init-vs-round-1 comparison rides the
+    # same job: sum(node) is init's sum(label), and equal sums mean
+    # round 1 changed no label (an edge set of self-loops only), so
+    # the labeling is already the fixpoint at any max_iter. The empty
+    # graph IS its own fixpoint (sum None) and returns the same way.
+    node_sum = F.sum(F.col("node").cast("decimal(38,0)")).alias("node_sum")
     obs0 = Observation()
     labels = (
         sym.groupBy("src")
@@ -113,11 +113,11 @@ def connected_components(
             F.col("src").alias("node"),
             F.least("src", "nmin").alias("label"),
         )
-        .observe(obs0, label_sum)
+        .observe(obs0, label_sum, node_sum)
         .localCheckpoint(eager=True)
     )
     prev_sum = obs0.get["label_sum"]
-    if prev_sum is None:  # no edges → no endpoints → empty labeling
+    if prev_sum == obs0.get["node_sum"]:  # no edges, or self-loops only
         return labels
     for _ in range(max_iter - 1):
         nbr = sym.join(
@@ -149,10 +149,12 @@ def connected_components(
     raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
 
 
-def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
+def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, DataFrame]:
     """Alternating large-star/small-star rounds (Kiveris et al.,
-    SoCC'14) until the edge set is stable. Returns the final star
-    edges (node → component minimum). Each round is two grouped
+    SoCC'14) until the edge set is stable. Returns (base, star): the
+    checkpointed distinct input edges, self-loops kept so every
+    endpoint stays listed, and the final star edges (node → component
+    minimum). Each round is two grouped
     aggregates + joins — same primitives as label propagation but
     O(log n) rounds on ANY diameter, which is why it is the scale
     path for long-chain graphs."""
@@ -186,26 +188,27 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
 
     # the stability checksum rides each round's checkpoint job via
     # observe() — same one-job-per-round discipline as
-    # connected_components' sum(label) convergence check
+    # connected_components' sum(label) convergence check. It covers
+    # non-self-loop edges only: the rounds never emit a self-loop
     def checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
+        real = F.col("u") != F.col("v")
         obs = Observation()
         out = e.observe(
             obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+            F.count(F.when(real, 1)).alias("n"),
+            F.coalesce(F.bit_xor(F.when(real, F.xxhash64("u", "v"))), F.lit(0)).alias("h"),
         ).localCheckpoint(eager=True)
         got = obs.get
         return out, (got["n"], got["h"])
 
-    e, prev = checkpoint_with_checksum(
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    base, prev = checkpoint_with_checksum(
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).distinct()
     )
+    e = base.filter(F.col("u") != F.col("v"))
     for _ in range(max_iter):
         e, cur = checkpoint_with_checksum(small_star(large_star(e)))
         if cur == prev:
-            return e
+            return base, e
         prev = cur
     raise RuntimeError(f"two-phase CC: no fixpoint after {max_iter} rounds")
 
@@ -217,12 +220,16 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src", dst: str 
     half = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
-    star = _star_rounds(half, max_iter)
+    base, star = _star_rounds(half, max_iter)
     members = star.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    roots = star.select(F.col("v").alias("node")).distinct().withColumn(
-        "label", F.col("node")
+    # every endpoint gets a row: roots and self-loop-only nodes appear
+    # in no star edge and label themselves
+    nodes = base.select(F.col("u").alias("node")).union(
+        base.select(F.col("v").alias("node"))
+    ).distinct()
+    return nodes.join(members, "node", "left").select(
+        "node", F.coalesce("label", F.col("node")).alias("label")
     )
-    return members.union(roots).distinct()
 
 
 def cluster_representatives(labels: DataFrame) -> DataFrame:

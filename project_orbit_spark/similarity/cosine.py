@@ -388,10 +388,11 @@ _IVF_ORACLE = f"""
     """
 
 
-def _packed_cents(cent: DataFrame) -> DataFrame:
-    """1-row packed centroid table — sorted (bucket, cvec) structs —
-    the broadcast the map-side routing reads (bucket is unique, so the
-    sort is just packing determinism)."""
+def packed_routes(cent: DataFrame) -> DataFrame:
+    """1-row packed routing table — sorted (bucket, cvec) structs over
+    a (label, cvec) centroid table — the broadcast the map-side
+    routing reads (bucket is unique, so the sort is just packing
+    determinism)."""
     return cent.groupBy().agg(
         F.array_sort(
             F.collect_list(
@@ -415,10 +416,13 @@ def _route_dists():
     )
 
 
-def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> DataFrame:
-    """IVF core against a caller-supplied centroid table: route each
+def ivf_topk(e: DataFrame, routes: DataFrame, recon: DataFrame | None = None) -> DataFrame:
+    """IVF core against a caller-supplied routing table: route each
     query to its nearest centroid (broadcast routing), cosine within
-    that bucket only (nprobe=1). With ``recon`` — a (vec_id, label,
+    that bucket only (nprobe=1). ``routes`` is the 1-row packed table
+    of ``packed_routes``: cold callers pack their centroids inline,
+    warm callers pass the persisted one from ``warm_centroids``, so a
+    warm probe only broadcasts it. With ``recon`` — a (vec_id, label,
     recon) frame — bucket members score against their PQ
     reconstructions instead of raw vectors — the asymmetric-distance
     IVF-PQ read path; the routing, tie-break, rank, and rounding
@@ -442,7 +446,7 @@ def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> D
     # exchange + sort every probe paid. struct(d, bucket) compares
     # field-lexicographically, so the (dist, bucket) tie-break is
     # bit-identical to the old ORDER BY dist, bucket / rn=1.
-    routed = q.crossJoin(F.broadcast(_packed_cents(cent))).select(
+    routed = q.crossJoin(F.broadcast(routes)).select(
         "qid", "qe", F.array_min(_route_dists())["bucket"].alias("bucket")
     )
     corpus = (
@@ -481,23 +485,26 @@ def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> D
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
-    return ivf_topk(e, centroids(e))
+    return ivf_topk(e, packed_routes(centroids(e)))
 
 
 _CENTROID_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
 
 
 def warm_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precompute + persist the per-label centroid table once per
-    (session, sf_dir) — at 100 TB centroids are a stored index
+    """Precompute + persist the IVF routing index once per (session,
+    sf_dir): the per-label centroids already packed into the 1-row
+    ``packed_routes`` table. At 100 TB centroids are a stored index
     artifact refreshed offline, not something each query re-derives
-    from the full corpus (a posexplode of every vector). Keyed on
-    applicationId (live-session id), released via clear_df_caches()."""
+    from the full corpus (a posexplode of every vector), and a warm
+    probe neither re-aggregates nor re-packs them: its plan reads the
+    one cached row into a broadcast. Keyed on applicationId
+    (live-session id), released via clear_df_caches()."""
     key = (cache_token(spark), sf_dir)
     if key not in _CENTROID_CACHE:
-        c = centroids(_emb(spark, sf_dir)).persist()
-        c.count()
-        _CENTROID_CACHE[key] = c
+        routes = packed_routes(centroids(_emb(spark, sf_dir))).persist()
+        routes.count()
+        _CENTROID_CACHE[key] = routes
     return _CENTROID_CACHE[key]
 
 
@@ -544,7 +551,7 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are the first two entries of the ascending (d, bucket) sort,
     # exploded; bit-identical to the old rn <= 2 window filter.
     routed = (
-        q.crossJoin(F.broadcast(_packed_cents(cent)))
+        q.crossJoin(F.broadcast(packed_routes(cent)))
         .select(
             "qid",
             "qe",
@@ -570,10 +577,12 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_ivf_topk_warm",
     bench=True,
     tags=("similarity", "ann"),
-    doc="ann_ivf_topk with the centroid table persisted ahead of time "
-    "(registry prepare hook → bench.py runs it outside the timer): "
-    "measures the steady-state IVF probe cost alone. Same output, "
-    "same oracle as the cold twin.",
+    doc="ann_ivf_topk with the packed 1-row routing table persisted "
+    "ahead of time (registry prepare hook → bench.py runs it outside "
+    "the timer): a probe broadcasts the cached row and scores one "
+    "bucket, with no centroid aggregate in its plan, so it measures "
+    "the steady-state IVF probe cost alone. Same output, same oracle "
+    "as the cold twin.",
     oracle=_IVF_ORACLE,
     prepare=lambda spark, sf_dir: warm_centroids(spark, sf_dir) and None,
 )
@@ -694,21 +703,6 @@ def _pq_chosen(codebook: DataFrame):
         ),
     )
     return pack, chosen
-
-
-def pq_codes(e: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(vec_id, s, code): each vector's nearest codeword id per
-    subspace (euclidean, code_label tie-break). THIS is the stored
-    index artifact at 100 TB — _PQ_M small ints per vector instead of
-    the raw floats (64 dims × float32 → 4 bytes of codes: 64×
-    compression) — computed map-side under the broadcast codebook
-    (see _pq_chosen: zero shuffles in the encode since r17)."""
-    pack, chosen = _pq_chosen(codebook)
-    return (
-        e.crossJoin(F.broadcast(pack))
-        .select("vec_id", F.posexplode(chosen).alias("s", "ch"))
-        .select("vec_id", F.col("s").cast("int").alias("s"), F.col("ch.code").alias("code"))
-    )
 
 
 def pq_reconstructions(e: DataFrame, codebook: DataFrame | None = None, codes: DataFrame | None = None) -> DataFrame:
@@ -846,7 +840,7 @@ _PQ_ORACLE = f"""
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
-    return ivf_topk(e, centroids(e), recon=pq_reconstructions(e))
+    return ivf_topk(e, packed_routes(centroids(e)), recon=pq_reconstructions(e))
 
 
 _PQ_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = register_df_cache({})
@@ -895,8 +889,9 @@ def warm_pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     bench=True,
     tags=("similarity", "ann", "pq"),
     doc="ann_ivf_pq_topk with the PQ index (codes + codebook) AND "
-    "coarse centroids persisted ahead of time (prepare hook, outside "
-    "the bench timer): measures the steady-state IVF-PQ serving cost "
+    "the packed coarse-centroid routing table persisted ahead of time "
+    "(prepare hook, outside the bench timer): measures the "
+    "steady-state IVF-PQ serving cost "
     "alone — routing, codeword lookup from the compressed codes, one "
     "bucket of asymmetric scoring. Same output, same oracle as the "
     "cold twin.",

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import constant_table, load
 from project_orbit_spark.registry import register
 
 # All 12 page types with their ordered probe patterns, verbatim from
@@ -109,8 +109,8 @@ def ats_probe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.regexp_replace("c_name", "[^a-zA-Z0-9]", "")).alias("company")
         )
     )
-    patterns = spark.createDataFrame(
-        _PATTERN_ROWS, "page_type string, probe_order long, pattern string"
+    patterns = constant_table(
+        spark, _PATTERN_ROWS, "page_type string, probe_order long, pattern string"
     )
     frontier = seeds.crossJoin(F.broadcast(patterns)).select(
         "company",
@@ -254,7 +254,7 @@ def feed_autodiscovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered = pages.mapInPandas(
         _make_feed_link_extractor(), "company string, feed_url string"
     ).withColumn("via", F.lit("link_tag"))
-    grid = spark.createDataFrame(_FEED_GRID_ROWS, "bp string, fn string")
+    grid = constant_table(spark, _FEED_GRID_ROWS, "bp string, fn string")
     candidates = companies.crossJoin(F.broadcast(grid)).select(
         "company",
         F.concat(

@@ -112,3 +112,34 @@ def test_fused_init_round_one_labels_match_min_neighbor(spark):
     # fused round + 1 detection round; labels are component minima.
     got = _labels(spark, [(10, 4), (10, 7), (10, 9)])
     assert got == {4: 4, 7: 4, 9: 4, 10: 4}
+
+
+@pytest.mark.parametrize("strategy", ["propagation", "auto"])
+def test_self_loops_only_are_a_round_one_fixpoint(spark, strategy):
+    # round 1 changes no label from init (sum(label) == sum(node)), so
+    # the labeling is final even on a one-round budget
+    df = spark.createDataFrame([(3, 3), (8, 8), (3, 3)], "src long, dst long")
+    got = {
+        r["node"]: r["label"]
+        for r in connected_components(df, max_iter=1, strategy=strategy).collect()
+    }
+    assert got == {3: 3, 8: 8}
+
+
+@pytest.mark.parametrize("strategy", ["propagation", "auto"])
+@pytest.mark.parametrize("max_iter", [2, 25])
+def test_mixed_self_loops_and_edges(spark, strategy, max_iter):
+    # a self-loop-only node keeps its own label next to a real
+    # component; on a two-round budget propagation cannot prove the
+    # fixpoint of the diameter-2 path (raises) and auto answers from
+    # the two-phase path, which must list the self-loop node too
+    df = spark.createDataFrame([(5, 5), (1, 2), (2, 3), (2, 2)], "src long, dst long")
+    if strategy == "propagation" and max_iter == 2:
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            connected_components(df, max_iter=max_iter, strategy=strategy)
+        return
+    got = {
+        r["node"]: r["label"]
+        for r in connected_components(df, max_iter=max_iter, strategy=strategy).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5}

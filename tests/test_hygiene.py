@@ -12,6 +12,9 @@ reintroduce a driver-side loop or a row-at-a-time Python UDF.
 - No wall-clock or RNG in operators: results must be pure functions
   of the input tables (rand()/uuid() would break oracle parity and
   re-run determinism; sampling is md5-hash-bucketed instead).
+- No ``createDataFrame(`` outside ``catalog.constant_table``: a table
+  built from a Python list is RDD-backed and every scan of it runs a
+  Python worker; the helper makes it a JVM LocalRelation.
 """
 
 from __future__ import annotations
@@ -82,6 +85,18 @@ def test_no_wall_clock_or_rng_in_operators():
     assert not offenders, (
         f"nondeterminism found at {offenders} — operators are pure "
         "functions of their input tables (hash-bucket instead)"
+    )
+
+
+def test_constant_tables_go_through_the_helper():
+    hits = {}
+    for p in _py_sources():
+        n = len(re.findall(r"createDataFrame\(", p.read_text()))
+        if n:
+            hits[str(p.relative_to(PKG))] = n
+    assert hits == {"catalog.py": 1}, (
+        f"createDataFrame sites: {hits} — build literal tables with "
+        "catalog.constant_table so they stay JVM LocalRelations"
     )
 
 
